@@ -171,7 +171,14 @@ def island_rows_cached(
     new process (each bench/oracle invocation) retrains from the parquet
     inputs at least once; a regenerated fixture under the same basename
     retrains.  ``build()`` returns the island DataFrame; collected rows
-    (the per-machine model cards) are what a registry stores."""
+    (the per-machine model cards) are what a registry stores.
+
+    Driver-collect bound: every row is collected to the driver and held
+    for the process lifetime.  That is sound only while the rows are
+    model-plane — a few cards per machine, growing with the fleet, never
+    with the event corpus (the round-15 review counted about 1.5k cards
+    for ``ml_lifecycle``).  An island whose output grows with events
+    must stay a DataFrame and must not be cached here."""
     import json
 
     from gordo_components_spark.caches import _parquet_rows, source_stat

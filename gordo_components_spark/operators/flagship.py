@@ -18,10 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from gordo_components_spark.operators.relational import _fshift, _fshift_col
 from gordo_components_spark.registry import register
 from gordo_components_spark.sources.tables import load_table
 
-_ORACLE = """
+_ORACLE = f"""
 WITH b AS (
   SELECT user_id,
          time_bucket(INTERVAL '10 minutes', CAST(ts AS TIMESTAMP)) AS bucket,
@@ -40,9 +41,9 @@ WITH b AS (
   FROM s
 )
 SELECT user_id, bucket,
-       round(v, 6) AS v,
-       round(score, 6) AS score,
-       round(threshold, 6) AS threshold
+       {_fshift("v", "v")},
+       {_fshift("score", "score")},
+       {_fshift("threshold", "threshold")}
 FROM t
 WHERE score > threshold
 """
@@ -73,7 +74,7 @@ def flagship_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return thresholded.where(F.col("score") > F.col("threshold")).select(
         "user_id",
         "bucket",
-        F.round("v", 6).alias("v"),
-        F.round("score", 6).alias("score"),
-        F.round("threshold", 6).alias("threshold"),
+        _fshift_col(F.col("v")).alias("v"),
+        _fshift_col(F.col("score")).alias("score"),
+        _fshift_col(F.col("threshold")).alias("threshold"),
     )

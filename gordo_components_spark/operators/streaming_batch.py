@@ -164,9 +164,9 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_cusum_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CUSUM change-point detection (rows-only): the serving
     face of ``window_cusum_alerts`` — per-(machine, tag) accumulated
-    drift above a TRAIN-window baseline, integer-exact bigint state
-    carried across three forced micro-batches via
-    ``applyInPandasWithState``.  Single-batch parity vs a sequential
+    drift above a TRAIN-window baseline, integer-exact DECIMAL state
+    carried across three forced micro-batches on a ``foreachBatch``
+    prefix-scan carry.  Single-batch parity vs a sequential
     reference plus cross-batch state-carry counts are asserted in
     tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_cusum
@@ -318,8 +318,8 @@ def stream_m4_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_twa_genuine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming time-weighted average (rows-only): the serving face of
     ``agg_time_weighted_avg`` — per-(machine, tag) trapezoid integral
-    carried across micro-batches as exact integer state via
-    ``applyInPandasWithState``; integer-exact single/multi-batch parity
+    carried across micro-batches as exact DECIMAL state on a
+    ``foreachBatch`` prefix-scan carry; integer-exact single/multi-batch parity
     is asserted in tests/test_streaming.py."""
     from gordo_components_spark.streaming.micro_batch import run_streaming_twa
 

@@ -19,7 +19,7 @@ import contextlib
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec, functions as F
 from pyspark.sql import types as T
 
 from gordo_components_spark.session import prepare
@@ -95,12 +95,15 @@ def _stream_shuffle_partitions(
     setting.
 
     ``python_stateful=True`` (the ``applyInPandasWithState`` faces keyed
-    by ~machine-cardinality) disables the est_rows DOWN-sizing and keeps
-    full parallelism: their cost is per-group PANDAS compute, and
-    coalescing serializes Python workers — the streaming twin of the
-    CLAUDE.md ``_spread`` invariant (measured on stream_cusum_genuine:
+    by ~machine-cardinality: EWMA and Hampel) disables the est_rows
+    DOWN-sizing and keeps full parallelism: their cost is per-group
+    PANDAS compute, and coalescing serializes Python workers — the
+    streaming twin of the CLAUDE.md ``_spread`` invariant.  The evidence
+    dates from when CUSUM still ran on pandas state (stream_cusum_genuine:
     7.0-7.8 s at 32 partitions vs 13.4-14.2 s at 8, same session,
-    interleaved — the exact inverse of the JVM-stateful faces)."""
+    interleaved — the exact inverse of the JVM-stateful faces).  CUSUM
+    and TWA now run on the JVM :class:`PrefixScanCarry`, whose batch
+    windows are JVM work and take the est_rows sizing."""
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     env = os.environ.get("GORDO_STREAM_SHUFFLE_PARTITIONS")
@@ -183,6 +186,18 @@ def _replay_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
     return _replay_cache(spark, sf_dir, "events_replay", "events", build)
 
 
+def _replay_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """The events replay as a file stream.  ``max_files_per_trigger=1``
+    delivers its three files as three micro-batches (cross-batch state
+    is exercised); ``None`` delivers the whole replay in one batch."""
+    reader = spark.readStream.schema(_RAW_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(_replay_dir(spark, sf_dir))
+
+
 def _run_to_memory(
     stream_df: DataFrame,
     query_name: str,
@@ -237,6 +252,97 @@ def _run_to_memory(
     return out
 
 
+def _scan_window(keys: list[str]) -> WindowSpec:
+    """Per-key window in the stream faces' exact within-batch order:
+    (ts, event_id) is unique because event_id is."""
+    return Window.partitionBy(*keys).orderBy("ts", "event_id")
+
+
+def _checked_bigint(col: str) -> F.Column:
+    """``CAST(col AS BIGINT)`` that raises when the value is outside
+    int64, whatever the session's ANSI setting (a non-ANSI cast would
+    return null)."""
+    c = F.col(col)
+    return F.when(
+        c.between(-(2**63), 2**63 - 1), c.cast("bigint")
+    ).otherwise(F.raise_error(F.concat(F.lit(f"{col} overflows bigint: "), c.cast("string"))))
+
+
+class PrefixScanCarry:
+    """``foreachBatch`` prefix-scan carry: per-key streaming state kept
+    as a small JVM table instead of ``applyInPandasWithState`` — for
+    recurrences that unroll to window prefix sums (Page's CUSUM, the
+    trapezoid integral).  The pandas-state protocol costs ~2.4 s per
+    3-batch run however cheap the update function is
+    (OPTIMIZATION_r15 §1); here each micro-batch is three relational
+    steps:
+
+    1. broadcast-join the batch to the carry (one row per key seen so
+       far, ``carry_ddl`` columns; null on a key's first batch);
+    2. ``step(seeded)`` folds the batch with window prefix sums ordered
+       by (ts, event_id) and returns each batch key's new carry row;
+    3. keys absent from the batch keep their row (full outer merge),
+       and the new carry commits with an eager ``localCheckpoint``
+       recorded under the batch id — a replayed batch id (restart from
+       the query checkpoint) is a no-op, so the carry stays exactly-once.
+
+    The carry is bounded by key cardinality (machines × tags), never by
+    stream length.  ``carry`` is the committed table; ``run`` drives a
+    stream through the helper and returns the final carry."""
+
+    def __init__(self, spark: SparkSession, keys: list[str], carry_ddl: str, step):
+        types = {f.name: f.dataType.simpleString() for f in _RAW_SCHEMA.fields}
+        ddl = ", ".join([f"{k} {types[k]}" for k in keys] + [carry_ddl])
+        self.keys = list(keys)
+        self.step = step
+        # the empty carry is committed like any other: a checkpointed
+        # relation keeps batch 0's plan the same shape as later batches'
+        # (an in-memory LocalRelation planned ~0.5 s slower every run)
+        self.carry = spark.createDataFrame([], ddl).localCheckpoint(eager=True)
+        self.batch_id = -1
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= self.batch_id:
+            return  # replayed batch: its carry is already committed
+        keys, carry = self.keys, self.carry
+        cols = [c for c in carry.columns if c not in keys]
+        stepped = self.step(batch_df.join(F.broadcast(carry), keys, "left"))
+        stepped = stepped.select(
+            *keys, F.lit(True).alias("_hit"), *[F.col(c).alias(f"_new_{c}") for c in cols]
+        )
+        merged = carry.join(stepped, keys, "full_outer").select(
+            *keys,
+            *[
+                F.when(F.col("_hit"), F.col(f"_new_{c}")).otherwise(F.col(c)).alias(c)
+                for c in cols
+            ],
+        )
+        self.carry = merged.localCheckpoint(eager=True)
+        self.batch_id = batch_id
+
+    def run(self, stream_df: DataFrame, query_name: str, est_rows: int | None = None) -> DataFrame:
+        """Drain ``stream_df`` (availableNow) through this carry and
+        return the final carry table; the run-scoped checkpoint dir is
+        removed even if the query raises."""
+        import shutil
+
+        spark = stream_df.sparkSession
+        chk = f"/tmp/gordo_spark_stream/chk/{query_name}-{uuid.uuid4().hex}"
+        try:
+            with _stream_shuffle_partitions(spark, est_rows=est_rows):
+                q = (
+                    stream_df.writeStream.foreachBatch(self)
+                    .queryName(query_name)
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", chk)
+                    .start()
+                )
+                q.awaitTermination()
+        finally:
+            shutil.rmtree(chk, ignore_errors=True)
+        return self.carry
+
+
 def run_streaming_tumbling_agg(
     spark: SparkSession,
     sf_dir: str,
@@ -253,11 +359,7 @@ def run_streaming_tumbling_agg(
     LATE and get dropped — the O36 semantic, observable (see
     tests/test_streaming.py::test_watermark_drops_late_batches)."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, max_files_per_trigger)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("event_type", F.window("ts", duration).alias("w"))
@@ -285,8 +387,7 @@ def run_streaming_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     models = trained_models(spark, sf_dir).where("status = 'ok'").cache()
     models.count()  # materialize once; broadcast into every micro-batch
 
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     # deploy-shaped sink: each micro-batch APPENDS its scored frame to a
     # parquet directory executor-side (the O7 sink), never collecting to
     # the driver — the demonstrated pattern is the deployable one.
@@ -376,12 +477,7 @@ def run_streaming_stateful_ewma(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _replay_stream(spark, sf_dir, 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -453,8 +549,7 @@ def run_streaming_watermark_dedup(
     (``dropDuplicatesWithinWatermark`` — state is bounded by the watermark,
     which is what makes this viable on an unbounded 100 TB/day stream)."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -530,8 +625,7 @@ def run_streaming_enrich_dim(
     the equivalent batch join+window — asserted in
     tests/test_streaming.py::test_enrich_dim_batch_parity."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     # no FORCED broadcast: the customer dim GROWS with the scale factor
     # (r7 mirror rule — explicit hints only for fixed-cardinality sides).
     # The static side is re-planned per micro-batch, and the planner
@@ -678,8 +772,7 @@ def run_streaming_session_agg(
     asserts emitted ⊆ batch sessions with bit-equal aggregates AND that
     every watermark-finalized batch session was emitted."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
@@ -718,34 +811,78 @@ def _v100(v: float) -> int:
     )
 
 
+#: the CUSUM and TWA faces' state key
+_KEYS = ["user_id", "event_type"]
+_CUSUM_CARRY = "s decimal(38,0), n_seen bigint, n_alerts bigint"
+_TWA_CARRY = (
+    "last_us bigint, last_v bigint, num decimal(38,0), span_us decimal(38,0),"
+    " rep_num decimal(38,0), rep_span decimal(38,0)"
+)
+
+
+def _zero() -> F.Column:
+    """DECIMAL(38,0) zero, the carry's empty sum."""
+    return F.lit(0).cast("decimal(38,0)")
+
+
+def _cusum_step(baseline: DataFrame):
+    """The CUSUM carry step over a (user_id, event_type, bn, bs1)
+    baseline: Page's s = max(0, s + d) with d = bn·(v100 − K100) − bs1,
+    unrolled within a batch to S = P − least(−s₀, running-min P), P the
+    DECIMAL running sum of d in (ts, event_id) order and s₀ the carried
+    statistic.  Alerts are the rows with S > bn·H100.  A key without a
+    baseline (bn = 0) keeps S = 0 and only counts rows."""
+    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
+
+    def step(seeded: DataFrame) -> DataFrame:
+        scan = _scan_window(_KEYS).rowsBetween(Window.unboundedPreceding, 0)
+        d = (
+            "CAST(coalesce(bn, 0) AS DECIMAL(20,0))"
+            f" * (CAST(round(value * 100) AS BIGINT) - {_CUSUM_K100})"
+            " - coalesce(bs1, 0)"
+        )
+        rows = (
+            seeded.join(F.broadcast(baseline), _KEYS, "left")
+            .withColumn("p", F.sum(F.expr(d)).over(scan))
+            .withColumn(
+                "S", F.col("p") - F.least(-F.coalesce("s", _zero()), F.min("p").over(scan))
+            )
+        )
+        return rows.groupBy(*_KEYS).agg(
+            F.expr("max_by(S, struct(ts, event_id))").alias("s"),
+            (F.coalesce(F.max("n_seen"), F.lit(0)) + F.count(F.lit(1))).alias("n_seen"),
+            (
+                F.coalesce(F.max("n_alerts"), F.lit(0))
+                + F.expr(f"count_if(S > coalesce(bn, 0) * {_CUSUM_H100})")
+            ).alias("n_alerts"),
+        )
+
+    return step
+
+
 def run_streaming_cusum(
     spark: SparkSession, sf_dir: str, single_batch: bool = False
 ) -> DataFrame:
-    """Streaming CUSUM change-point detector via ``applyInPandasWithState``
+    """Streaming CUSUM change-point detector on a :class:`PrefixScanCarry`
     — the serving-side face of ``window_cusum_alerts``: a per-(machine,
-    tag) accumulated-excess statistic that SURVIVES across micro-batches
-    (state store), alarming when drift above a trained baseline mean
-    crosses the threshold.  The baseline is fitted from the train window
-    (the drift family's ``_DRIFT_SPLIT_TS``) of the static table — the
-    trained-detector + live-stream split a real deployment has — and
-    travels as a broadcast variable (machines × tags: group-cardinality
-    bounded, shipped once per executor — the bounded-collect contract).
+    tag) accumulated-excess statistic that SURVIVES across micro-batches,
+    alarming when drift above a trained baseline mean crosses the
+    threshold (the recurrence and its prefix-scan form:
+    :func:`_cusum_step`).  The baseline (bn rows, bs1 = Σ v100) is fitted
+    from the train window (the drift family's ``_DRIFT_SPLIT_TS``) of the
+    static table — the trained-detector + live-stream split a real
+    deployment has — and is a localCheckpointed table bounded by key
+    cardinality (machines × tags, never the corpus), broadcast-joined
+    into every batch.
 
-    Semantics mirror the stateful-EWMA face: exact (ts, event_id) order
-    within a micro-batch, arrival order across batches (any real
-    stream's contract).  ``single_batch=True`` delivers the whole replay
-    as one batch, making the run byte-for-byte reproducible against a
-    sequential reference — the parity path tests/test_streaming.py
-    drives.  State is integer-exact: the Page recurrence runs on
-    s = max(0, s + bn·(v100 − k) − bs1) with bigint state (exact while
-    |s| < 2⁶³; a 100 TB deployment would widen the state field to a
-    string-encoded int, same algebra)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Semantics: exact (ts, event_id) order within a micro-batch, arrival
+    order across batches (any real stream's contract).
+    ``single_batch=True`` delivers the whole replay as one batch, making
+    the run reproducible against a sequential reference — the parity
+    path tests/test_streaming.py drives.  The result is the final carry
+    joined to the baseline: cusum = s / (bn·100) in double, null for a
+    key without a baseline."""
     from gordo_components_spark.operators.model_sql import _DRIFT_SPLIT_TS
-    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
     from gordo_components_spark.sources.tables import load_events_in_range
 
     prepare(spark)
@@ -755,84 +892,26 @@ def run_streaming_cusum(
     # column first, so the baseline fold prunes row groups at the source.
     # The bound is the drift family's shared _DRIFT_SPLIT_TS, so the
     # streaming baseline and the batch drift faces cannot drift apart.
-    base_rows = (
+    baseline = (
         load_events_in_range(spark, sf_dir, to_ts=_DRIFT_SPLIT_TS)
-        .groupBy("user_id", "event_type")
+        .groupBy(*_KEYS)
         .agg(
             F.count(F.lit(1)).alias("bn"),
-            F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)").alias(
-                "bs1"
-            ),
+            F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)").alias("bs1"),
         )
-        .collect()
+        .localCheckpoint(eager=True)
     )
-    # Baseline travels as a BROADCAST VARIABLE, not a closure capture:
-    # the dict is bounded by group cardinality (machines × tags — the
-    # model-table size, NOT the corpus; a 10⁴-machine × 10²-tag fleet is
-    # ~10⁶ entries ≈ tens of MB), and broadcasting ships it once per
-    # executor instead of once per task serialization.  At a fleet where
-    # even that bound bites, the baseline would become a state-store
-    # initial-state load (statefulProcessor initialState) — same algebra.
-    baseline_bc = spark.sparkContext.broadcast(
-        {(r["user_id"], r["event_type"]): (r["bn"], r["bs1"]) for r in base_rows}
-    )
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
-
-    def update(key, pdfs, state: GroupState):
-        bn, bs1 = baseline_bc.value.get((key[0], key[1]), (0, 0))
-        if state.exists:
-            s, n_seen, n_alerts = state.get
-        else:
-            s, n_seen, n_alerts = 0, 0, 0
-        rows = _group_rows(pdfs)
-        if len(rows) and bn:
-            # identical fold order via the lexsort permutation (unique
-            # composite key) — no full-frame sorted copy per group
-            vals = rows["value"].values[_ts_event_order(rows)]
-            thr = bn * _CUSUM_H100
-            for v in vals:
-                d = bn * (_v100(v) - _CUSUM_K100) - bs1
-                s = max(0, s + d)
-                n_seen += 1
-                if s > thr:
-                    n_alerts += 1
-        elif len(rows):
-            n_seen += len(rows)  # cold key: no baseline, count only
-        state.update((int(s), int(n_seen), int(n_alerts)))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "event_type": key[1],
-                    "cusum": (s / (bn * 100.0)) if bn else None,
-                    "n_seen": n_seen,
-                    "n_alerts": n_alerts,
-                }
-            ]
-        )
-
-    out = stream.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, event_type string, cusum double, "
-            "n_seen bigint, n_alerts bigint"
-        ),
-        stateStructType="s bigint, n_seen bigint, n_alerts bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out,
-        name,
-        output_mode="update",
-        latest_by=(("user_id", "event_type"), "n_seen"),
+    carry = PrefixScanCarry(spark, _KEYS, _CUSUM_CARRY, _cusum_step(baseline))
+    final = carry.run(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_cusum_{uuid.uuid4().hex[:8]}",
         est_rows=_events_rows(sf_dir),
-        python_stateful=True,
+    )
+    return final.join(F.broadcast(baseline), _KEYS, "left").select(
+        *_KEYS,
+        (F.col("s").cast("double") / (F.col("bn").cast("double") * 100.0)).alias("cusum"),
+        "n_seen",
+        "n_alerts",
     )
 
 
@@ -870,11 +949,7 @@ def run_streaming_hampel(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -943,8 +1018,7 @@ def run_streaming_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     order).  Batch↔stream parity is asserted in
     tests/test_streaming.py."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    stream = spark.readStream.schema(_RAW_SCHEMA).parquet(src)
+    stream = _replay_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id", "event_type", F.window("ts", "6 hours").alias("w"))
@@ -970,98 +1044,91 @@ def run_streaming_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, name, est_rows=_events_rows(sf_dir))
 
 
+def _twa_step(seeded: DataFrame) -> DataFrame:
+    """The TWA carry step: each reading adds the trapezoid segment
+    (v_prev + v)·Δµs, with v = v100 and (µs_prev, v_prev) from ``lag``
+    in (ts, event_id) order; a key's first row in the batch is seeded
+    from the carry's last reading, so the boundary segment between
+    batches connects through it.  Segments and spans sum in
+    DECIMAL(38,0), where an int64 fold of mixed-sign terms can wrap
+    silently.  ``rep_num``/``rep_span`` keep the batch-end state with
+    the largest span (the later one on ties)."""
+    scan = _scan_window(_KEYS)
+    rows = (
+        seeded.withColumn("us", F.unix_micros("ts"))
+        .withColumn("v", F.expr("CAST(round(value * 100) AS BIGINT)"))
+        .withColumn(
+            "seg_us",
+            F.col("us").cast("decimal(20,0)") - F.coalesce(F.lag("us").over(scan), "last_us"),
+        )
+        .withColumn(
+            "seg_num",
+            (F.coalesce(F.lag("v").over(scan), "last_v").cast("decimal(20,0)") + F.col("v"))
+            * F.col("seg_us"),
+        )
+    )
+    batch_end = rows.groupBy(*_KEYS).agg(
+        F.expr("max_by(us, struct(ts, event_id))").alias("last_us"),
+        F.expr("max_by(v, struct(ts, event_id))").alias("last_v"),
+        (F.coalesce(F.max("num"), _zero()) + F.coalesce(F.sum("seg_num"), _zero())).alias("num"),
+        (F.coalesce(F.max("span_us"), _zero()) + F.coalesce(F.sum("seg_us"), _zero())).alias(
+            "span_us"
+        ),
+        F.max("rep_num").alias("rep_num"),
+        F.max("rep_span").alias("rep_span"),
+    )
+    newer = F.col("rep_span").isNull() | (F.col("span_us") >= F.col("rep_span"))
+    return batch_end.select(
+        *_KEYS,
+        "last_us",
+        "last_v",
+        "num",
+        "span_us",
+        F.when(newer, F.col("num")).otherwise(F.col("rep_num")).alias("rep_num"),
+        F.when(newer, F.col("span_us")).otherwise(F.col("rep_span")).alias("rep_span"),
+    )
+
+
 def run_streaming_twa(
     spark: SparkSession, sf_dir: str, single_batch: bool = False
 ) -> DataFrame:
-    """Streaming time-weighted average via ``applyInPandasWithState`` —
+    """Streaming time-weighted average on a :class:`PrefixScanCarry` —
     the serving face of ``agg_time_weighted_avg``: per (machine, tag),
-    the trapezoid integral accumulates ACROSS micro-batches (state =
-    last reading + exact integer numerator/span), emitting each key's
-    running TWA — what a live dashboard's "average so far" must mean
-    under irregular sampling.
+    the trapezoid integral accumulates ACROSS micro-batches (the carry
+    is (last_us, last_v, num, span_us); segments: :func:`_twa_step`), and
+    each key reports its running TWA — what a live dashboard's "average
+    so far" must mean under irregular sampling.
 
-    Integer-exact state: (last_us, last_v100, num, span_us) — each
-    segment adds (v100_prev + v100)·Δµs to num; at the replay's span
-    num stays ≤ ~1e17 < 2⁶³ (exact), and the emitted num/span_us ints
-    make the batch↔stream parity check in tests/test_streaming.py
-    integer-exact (the float twa is derived, not compared).  Order
-    contract mirrors the CUSUM/Hampel faces: exact (ts, event_id)
-    within a batch, arrival order across batches."""
-    import pandas as pd
+    The ``num``/``span_us`` outputs cast back from DECIMAL to bigint
+    through :func:`_checked_bigint`, so a total past int64 raises
+    instead of wrapping; the float twa is derived from those ints, which
+    keeps the batch↔stream parity check in tests/test_streaming.py
+    integer-exact.
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Order contract mirrors the CUSUM face: exact (ts, event_id) within
+    a batch, arrival order across batches.  Arrival order can run
+    backwards in time (a segment with Δµs < 0), so span_us is not
+    monotone across batches; the reported row per key is the batch-end
+    state with the largest span_us, the row the update-mode face has
+    always reported.  With ``single_batch=True`` that is the final
+    state."""
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.exists:
-            last_us, last_v, num, span = state.get
-        else:
-            last_us, last_v, num, span = None, None, 0, 0
-        rows = _group_rows(pdfs)
-        if len(rows):
-            order = _ts_event_order(rows)
-            us_arr = (
-                rows["ts"].values[order].astype("datetime64[us]").astype("int64")
-            )
-            # per-element _v100 (the repr-exact half-up contract) over the
-            # identically-ordered values; the trapezoid fold itself
-            # vectorizes EXACTLY — every term (v_prev + v)·Δµs is the same
-            # int64 product the sequential loop added (integer sums are
-            # order-free; the docstring's |num| < 2⁶³ invariant bounds the
-            # partials the same way it bounded the running total)
-            v100 = np.fromiter(
-                (_v100(v) for v in rows["value"].values[order]),
-                dtype="int64",
-                count=len(rows),
-            )
-            if last_us is not None:
-                us_ext = np.concatenate(([last_us], us_arr))
-                v_ext = np.concatenate(([last_v], v100))
-            else:
-                us_ext, v_ext = us_arr, v100
-            if len(us_ext) >= 2:
-                dus = np.diff(us_ext)
-                num += int(np.sum((v_ext[:-1] + v_ext[1:]) * dus))
-                span += int(us_ext[-1] - us_ext[0])
-            last_us, last_v = int(us_arr[-1]), int(v100[-1])
-        state.update((last_us, last_v, int(num), int(span)))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "event_type": key[1],
-                    "num": num,
-                    "span_us": span,
-                    "twa": (num / (200.0 * span)) if span else None,
-                }
-            ]
-        )
-
-    out = stream.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id bigint, event_type string, num bigint, span_us bigint,"
-            " twa double"
-        ),
-        stateStructType=(
-            "last_us bigint, last_v bigint, num bigint, span_us bigint"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    carry = PrefixScanCarry(spark, _KEYS, _TWA_CARRY, _twa_step)
+    final = carry.run(
+        _replay_stream(spark, sf_dir, None if single_batch else 1),
+        f"stream_twa_{uuid.uuid4().hex[:8]}",
+        est_rows=_events_rows(sf_dir),
     )
-    name = f"stream_twa_{uuid.uuid4().hex[:8]}"
-    return _run_to_memory(
-        out, name, output_mode="update",
-        latest_by=(("user_id", "event_type"), "span_us"),
-        est_rows=_events_rows(sf_dir), python_stateful=True,
+    return final.select(
+        *_KEYS,
+        _checked_bigint("rep_num").alias("num"),
+        _checked_bigint("rep_span").alias("span_us"),
+    ).withColumn(
+        "twa",
+        F.when(
+            F.col("span_us") != 0,
+            F.col("num").cast("double") / (200.0 * F.col("span_us").cast("double")),
+        ),
     )
 
 
@@ -1082,11 +1149,7 @@ def run_streaming_benford(
     )
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, max_files_per_trigger)
     v = stream.where(F.expr("round(value * 100) >= 1")).select(
         "event_type",
         F.expr(
@@ -1132,11 +1195,7 @@ def run_streaming_bottomk_sample(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
@@ -1254,11 +1313,7 @@ def run_streaming_countmin(
     from gordo_components_spark.operators.relational_extra import _cm_cell, _CM_D
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
     cell = _cm_cell("h", "instr", "r")
     cells = stream.withColumn(
         "h", F.expr("md5(event_type || ':' || CAST(user_id AS STRING))")
@@ -1297,11 +1352,7 @@ def run_streaming_heavy_hitters(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare(spark)
-    src = _replay_dir(spark, sf_dir)
-    reader = spark.readStream.schema(_RAW_SCHEMA)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    stream = reader.parquet(src)
+    stream = _replay_stream(spark, sf_dir, None if single_batch else 1)
 
     def update(key, pdfs, state: GroupState):
         if state.exists:

@@ -51,3 +51,51 @@ def test_cache_rebuilds_on_missing_marker(tmp_path, sf_dir):
     os.remove(os.path.join(out, "_FP.json"))  # e.g. a killed half-write
     materialized_cache(sf_dir, root, "leg", "events", _builds(counter))
     assert counter["n"] == 2
+
+
+def test_relation_cache_concurrent_eviction(tmp_path, monkeypatch):
+    # several threads push the relation cache past its 256-entry bound at
+    # once: eviction iterates the dict while the others insert, which
+    # raises "dictionary changed size during iteration" without the lock
+    import sys
+    import threading
+
+    from gordo_components_spark.sources import tables
+
+    class _Reader:
+        def parquet(self, path):
+            return path
+
+    class _Session:  # weakref-able stand-in: only ``read.parquet`` is used
+        read = _Reader()
+
+    paths = []
+    for i in range(600):
+        p = tmp_path / f"t{i}.parquet"
+        p.write_bytes(b"")
+        paths.append(str(p))
+    monkeypatch.setattr(tables, "_RELATION_CACHE", {})
+    session = _Session()
+    errors = []
+    n_threads = 6
+
+    def worker(t):
+        try:
+            for _ in range(4):
+                for p in paths[t::n_threads]:
+                    assert tables._read_parquet(session, p) == p
+        except Exception as e:  # noqa: BLE001 — collected and asserted below
+            errors.append(e)
+
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often: widen the race
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(prior)
+    assert not errors, errors[:3]
+    assert len(tables._RELATION_CACHE) <= 257

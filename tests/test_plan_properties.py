@@ -1104,3 +1104,36 @@ def test_manifest_commit_plans_audited_and_no_scaling_broadcast(spark, sf_dir):
         f"fixture kinds missing from plan_audit._EAGER_PLANS: "
         f"{set(ep._MANIFEST_PLAN_ROOTS) - audited_kinds}"
     )
+
+
+def _write_plans(spark, name, sf_dir) -> list[str]:
+    """Physical plans of the file writes that running ``name`` executed,
+    read from the SQL status store (a rows-only sink returns the re-read
+    directory, so ``plan_of`` never sees the write itself)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        xs = store.executionsList()
+        return {xs.apply(i).executionId(): xs.apply(i) for i in range(xs.size())}
+
+    seen = set(executions())
+    load_all()[name].fn(spark, sf_dir)
+    plans = [e.physicalPlanDescription() for i, e in executions().items() if i not in seen]
+    return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+
+
+@pytest.mark.parametrize(
+    "name, col", [("sink_predictions_parquet", "is_anomaly"), ("pipe_curation_write", "split")]
+)
+def test_partitioned_sinks_rebalance_by_partition_column(spark, sf_dir, name, col):
+    # the REBALANCE hint on the partition column is what keeps these
+    # partitioned writes from leaving ~cores tiny files per partition
+    # dir; without a guard a dropped hint only shows as small files
+    import re
+
+    writes = _write_plans(spark, name, sf_dir)
+    assert writes, f"{name} executed no file write"
+    rebalance = re.compile(rf"hashpartitioning\({col}#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL")
+    for plan in writes:
+        assert rebalance.search(plan), plan

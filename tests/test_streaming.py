@@ -631,3 +631,209 @@ def test_heavy_hitters_stream_mg_bounds(spark, sf_dir):
         for (t, uid), c in exact.items():
             if t == tag and c * k > n_seen:
                 assert uid in cand
+
+
+# --- PrefixScanCarry driven directly over hand-split batches -------------
+
+_CARRY_COLS = "event_id bigint, us bigint, user_id bigint, event_type string, value double"
+
+
+def _batch(spark, rows):
+    """A micro-batch in the replay schema from (event_id, µs, user,
+    tag, value) tuples; ts is built from the µs integer so no timezone
+    enters the test."""
+    return spark.createDataFrame(rows, _CARRY_COLS).select(
+        "event_id", F.timestamp_micros("us").alias("ts"), "user_id", "event_type", "value"
+    )
+
+
+def _carry_state(carry, cols):
+    return {
+        (r["user_id"], r["event_type"]): tuple(r[c] for c in cols)
+        for r in carry.carry.collect()
+    }
+
+
+def _by_key(rows):
+    out = {}
+    for r in rows:
+        out.setdefault((r[2], r[3]), []).append(r)
+    return {k: sorted(v, key=lambda r: (r[1], r[0])) for k, v in out.items()}
+
+
+def test_prefix_scan_carry_cusum_matches_sequential_page(spark):
+    from gordo_components_spark.operators.windows import _CUSUM_H100, _CUSUM_K100
+    from gordo_components_spark.streaming.micro_batch import (
+        _CUSUM_CARRY,
+        _KEYS,
+        PrefixScanCarry,
+        _cusum_step,
+        _v100,
+    )
+
+    base = {(1, "click"): (2, 200), (3, "click"): (3, 900)}  # (bn, bs1)
+    baseline = spark.createDataFrame(
+        [(u, t, bn, bs1) for (u, t), (bn, bs1) in base.items()],
+        "user_id bigint, event_type string, bn bigint, bs1 bigint",
+    )
+    batches = [
+        [  # key (1, click) climbs over bn·H100 = 10000 (two equal ts:
+            # event_id breaks the tie); (2, view) has no baseline
+            (1, 100, 1, "click", 50.0),
+            (3, 200, 1, "click", 50.0),
+            (2, 200, 1, "click", 20.0),
+            (4, 150, 2, "view", 7.5),
+            (5, 100, 3, "click", 90.0),
+        ],
+        [  # (1, click) resets to 0 and climbs again; (3, click) absent
+            (6, 400, 1, "click", -500.0),
+            (7, 300, 1, "click", 60.0),
+            (8, 500, 1, "click", 60.0),
+            (9, 500, 2, "view", 1.0),
+        ],
+        [  # (3, click) returns; arrival order runs back in time
+            (10, 50, 3, "click", 10.0),
+            (11, 60, 3, "click", 95.0),
+            (12, 600, 1, "click", 0.01),
+        ],
+    ]
+    carry = PrefixScanCarry(spark, _KEYS, _CUSUM_CARRY, _cusum_step(baseline))
+    state: dict = {}
+    alerted_then_reset = False
+    for bid, rows in enumerate(batches):
+        carry(_batch(spark, rows), bid)
+        for key, group in _by_key(rows).items():
+            bn, bs1 = base.get(key, (0, 0))
+            s, n_seen, n_alerts = state.get(key, (0, 0, 0))
+            for r in group:
+                prev = s
+                s = max(0, s + bn * (_v100(r[4]) - _CUSUM_K100) - bs1)
+                alerted_then_reset |= prev > bn * _CUSUM_H100 and s == 0
+                n_seen += 1
+                n_alerts += s > bn * _CUSUM_H100
+            state[key] = (s, n_seen, n_alerts)
+        got = _carry_state(carry, ["s", "n_seen", "n_alerts"])
+        assert {k: (int(v[0]), v[1], v[2]) for k, v in got.items()} == state, bid
+    assert alerted_then_reset  # the fixture exercises an alarm and a reset
+    assert state[(1, "click")][2] > 0 and state[(2, "view")] == (0, 2, 0)
+
+
+def test_prefix_scan_carry_replayed_batch_is_noop(spark):
+    from gordo_components_spark.streaming.micro_batch import (
+        _KEYS,
+        _TWA_CARRY,
+        PrefixScanCarry,
+        _twa_step,
+    )
+
+    carry = PrefixScanCarry(spark, _KEYS, _TWA_CARRY, _twa_step)
+    carry(_batch(spark, [(1, 10, 1, "click", 1.0), (2, 20, 1, "click", 2.0)]), 0)
+    second = [(3, 40, 1, "click", 4.0), (4, 30, 2, "view", 3.0)]
+    carry(_batch(spark, second), 1)
+    committed = carry.carry
+    before = sorted(map(tuple, committed.collect()))
+    carry(_batch(spark, second), 1)  # restart replays batch 1
+    carry(_batch(spark, [(9, 90, 1, "click", 9.0)]), 0)  # and an older one
+    assert carry.carry is committed
+    assert carry.batch_id == 1
+    assert sorted(map(tuple, carry.carry.collect())) == before
+
+
+def _twa_reference(batches):
+    """Literal sequential trapezoid fold in Python ints (arrival order
+    across batches, (ts, event_id) within one), with the reported row
+    the face keeps: the batch-end state with the largest span."""
+    from gordo_components_spark.streaming.micro_batch import _v100
+
+    state, report = {}, {}
+    for rows in batches:
+        for key, group in _by_key(rows).items():
+            last_us, last_v, num, span = state.get(key, (None, None, 0, 0))
+            for r in group:
+                v = _v100(r[4])
+                if last_us is not None:
+                    num += (last_v + v) * (r[1] - last_us)
+                    span += r[1] - last_us
+                last_us, last_v = r[1], v
+            state[key] = (last_us, last_v, num, span)
+            if key not in report or span >= report[key][1]:
+                report[key] = (num, span)
+    return state, report
+
+
+def test_prefix_scan_carry_twa_matches_sequential_trapezoid(spark):
+    from gordo_components_spark.streaming.micro_batch import (
+        _KEYS,
+        _TWA_CARRY,
+        PrefixScanCarry,
+        _twa_step,
+    )
+
+    batches = [
+        [(1, 1_000, 1, "click", 2.5), (2, 4_000, 1, "click", -1.25), (3, 2_000, 2, "view", 7.0)],
+        [(4, 3_000, 2, "view", 1.0), (5, 9_000, 1, "click", 3.0), (6, 8_000, 1, "click", 0.5)],
+        [(7, 500, 1, "click", 4.0), (8, 6_000, 2, "view", -2.0)],  # (1, click) back in time
+    ]
+    carry = PrefixScanCarry(spark, _KEYS, _TWA_CARRY, _twa_step)
+    for bid, rows in enumerate(batches):
+        carry(_batch(spark, rows), bid)
+        state, report = _twa_reference(batches[: bid + 1])
+        got = _carry_state(carry, ["last_us", "last_v", "num", "span_us", "rep_num", "rep_span"])
+        assert {
+            k: (v[0], v[1], int(v[2]), int(v[3])) for k, v in got.items()
+        } == state, bid
+        assert {k: (int(v[4]), int(v[5])) for k, v in got.items()} == report, bid
+    # the out-of-order batch shrank (1, click)'s span: the report keeps
+    # the earlier, longer one
+    assert report[(1, "click")] != state[(1, "click")][2:]
+
+
+def test_prefix_scan_carry_twa_mixed_sign_past_int64_is_exact(spark):
+    # batch 0's trapezoid sum is 1.6e19 > 2⁶³: an int64 fold wraps it
+    # (silently); batch 1's negative segments bring the total back to
+    # 8e18 < 2⁶³, which the DECIMAL carry reports exactly
+    import numpy as np
+
+    from gordo_components_spark.streaming.micro_batch import (
+        _KEYS,
+        _TWA_CARRY,
+        PrefixScanCarry,
+        _checked_bigint,
+        _twa_step,
+    )
+
+    big = 4e13  # v100 = 4e15
+    batches = [
+        [(1, 0, 1, "click", big), (2, 2_000, 1, "click", big)],
+        [(3, 3_000, 1, "click", -big), (4, 4_000, 1, "click", -big)],
+    ]
+    with np.errstate(over="ignore"):  # batch 0's segment, folded in int64
+        wrapped = int(np.sum(np.array([8 * 10**15], dtype="int64") * 2_000))
+    assert wrapped != 16 * 10**18  # the input really wraps int64
+
+    carry = PrefixScanCarry(spark, _KEYS, _TWA_CARRY, _twa_step)
+    for bid, rows in enumerate(batches):
+        carry(_batch(spark, rows), bid)
+    _, report = _twa_reference(batches)
+    assert report[(1, "click")] == (8 * 10**18, 4_000)
+    row = carry.carry.select(
+        _checked_bigint("rep_num").alias("num"), _checked_bigint("rep_span").alias("span")
+    ).first()
+    assert (row["num"], row["span"]) == (8 * 10**18, 4_000)
+
+
+def test_prefix_scan_carry_twa_total_past_int64_raises(spark):
+    # a total that does not fit bigint must fail loudly, not wrap
+    from gordo_components_spark.streaming.micro_batch import (
+        _KEYS,
+        _TWA_CARRY,
+        PrefixScanCarry,
+        _checked_bigint,
+        _twa_step,
+    )
+
+    carry = PrefixScanCarry(spark, _KEYS, _TWA_CARRY, _twa_step)
+    carry(_batch(spark, [(1, 0, 1, "click", 4e13), (2, 2_000, 1, "click", 4e13)]), 0)
+    assert int(carry.carry.first()["rep_num"]) == 16 * 10**18
+    with pytest.raises(Exception, match="overflows bigint"):
+        carry.carry.select(_checked_bigint("rep_num")).collect()

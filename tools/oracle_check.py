@@ -85,6 +85,51 @@ def check_one(spark, con, name, spec, sf_dir):
     return res
 
 
+#: queries per DuckDB connection.  The binding constraint for a long
+#: oracle session is the process's memory-map count (vm.max_map_count,
+#: default 65530), not RAM: DuckDB's buffer manager mallocs 256 KB
+#: blocks (one glibc mmap each) and its bundled jemalloc RETAINS tens of
+#: thousands of small anonymous mappings.  The full-registry sf0.1
+#: session once died in pipe_bpe_merges' 24-CTE oracle with "Failed to
+#: allocate block of 32768 bytes" while RAM sat free.  Closing the
+#: connection releases its maps, so reconnecting bounds the growth from
+#: inside the process.
+RECONNECT_EVERY = 25
+_MAP_QUOTA_WANTED = 262144
+
+
+def _warn_map_quota() -> None:
+    """Read vm.max_map_count and warn when it is low.  The script never
+    writes it: it is a machine-wide kernel setting."""
+    try:
+        with open("/proc/sys/vm/max_map_count") as fh:
+            quota = int(fh.read())
+    except (OSError, ValueError):
+        return
+    if quota < _MAP_QUOTA_WANTED:
+        print(
+            f"oracle_check: vm.max_map_count is {quota}; a long DuckDB session "
+            f"can exhaust it (connections are reopened every {RECONNECT_EVERY} "
+            "queries to bound the growth)",
+            file=sys.stderr,
+        )
+
+
+def _duck(sf: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB oracle connection over the fixture tables.  The 8 GB pool
+    caps the buffer manager at 32768 block mappings; the temp directory
+    lets heavy chains spill instead of raising; threads never exceed the
+    cores this process may run on."""
+    con = duckdb.connect()
+    os.makedirs("/tmp/gordo_duck_spill", exist_ok=True)
+    con.execute("SET memory_limit='8GB'")
+    con.execute("SET temp_directory='/tmp/gordo_duck_spill'")
+    con.execute(f"SET threads TO {min(16, len(os.sched_getaffinity(0)))}")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    return con
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -104,54 +149,17 @@ def main():
 
     registry = load_all()
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    # Bound the ORACLE side and give it a spill path (round-10,
-    # root-caused with a /proc/PID/maps monitor): the full-registry
-    # sf0.1 session died in pipe_bpe_merges' 24-CTE oracle with
-    # "Failed to allocate block of 32768 bytes" while 120 GB of RAM sat
-    # free — the process had hit vm.max_map_count (65530) EXACTLY.
-    # DuckDB's buffer manager allocates 256 KB blocks through malloc,
-    # glibc mmaps every allocation past the 128 KB threshold, so a
-    # 16 GB buffer pool is 65536 mappings — the map quota, not memory,
-    # is the binding constraint.  8 GB caps the pool at 32768 mappings
-    # (plus ~3k for python/pyarrow/py4j — comfortable margin) and the
-    # temp_directory lets the heavy chain SPILL instead of raising (an
-    # in-memory duckdb connection has no spill path by default).  The
-    # r9 "tail-of-session memory transient" reproduced-clean-standalone
-    # for the same reason: standalone, the pool started empty.
-    # Second finding from the same monitor: the map pressure is mostly
-    # tens of thousands of SMALL retained anonymous mappings (DuckDB's
-    # bundled jemalloc retains virtual maps by design), so the block
-    # cap alone is not sufficient for a 252-query session — raise the
-    # kernel quota too when we can (root in this container; best-effort
-    # no-op elsewhere; value persists until container restart).
-    try:
-        with open("/proc/sys/vm/max_map_count") as fh:
-            if int(fh.read()) < 262144:
-                with open("/proc/sys/vm/max_map_count", "w") as wfh:
-                    wfh.write("1048576")
-                # machine-wide kernel setting mutated as a side effect —
-                # say so when it actually happens (r10 advisory: silent
-                # global change on shared hosts), persists to reboot
-                print(
-                    "oracle_check: raised vm.max_map_count to 1048576 "
-                    "(machine-wide, persists until container restart)",
-                    file=sys.stderr,
-                )
-    except OSError:
-        pass
-    os.makedirs("/tmp/gordo_duck_spill", exist_ok=True)
-    con.execute("SET memory_limit='8GB'")
-    con.execute("SET temp_directory='/tmp/gordo_duck_spill'")
-    con.execute("SET threads TO 16")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')")
+    _warn_map_quota()
+    con = _duck(args.sf)
 
     names = args.names or sorted(registry)
     n_ok = 0
     failed = []
     results = []
-    for name in names:
+    for i, name in enumerate(names):
+        if i and i % RECONNECT_EVERY == 0:
+            con.close()  # hand DuckDB's retained mappings back to the OS
+            con = _duck(args.sf)
         if name not in registry:
             print(f"{name:32s} UNKNOWN")
             continue
@@ -188,6 +196,7 @@ def main():
                 "t_spark": round(res["t_spark"], 3) if "t_spark" in res else None,
             }
         )
+    con.close()
     print(f"\n{n_ok}/{len(names)} ok; failed: {failed}")
     if args.json:
         import json
